@@ -680,12 +680,14 @@ def lined_corpus(
     """
     from dhtmlparser3_spark.plans.layout import spread
 
+    # tokens projected once: the per-chunk lambda below captures the
+    # column, not the split expression (which would re-run per chunk)
     docs = spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
-    )
-    toks = tokens_col("text")
+    ).select("doc_id", tokens_col("text").alias("toks"))
+    toks = F.col("toks")
     n_chunks = F.ceil(F.size(toks) / F.lit(tokens_per_line)).cast("int")
     body = F.array_join(
         F.transform(
@@ -853,6 +855,7 @@ def line_dup_stats(
 # ---------------------------------------------------------------------------
 
 
+# HOF lambdas must capture columns, not expressions
 def dup_spans(
     df: DataFrame,
     k: int = 8,
@@ -879,7 +882,7 @@ def dup_spans(
     broadcast (high min_occ / bounded boilerplate), same contract as
     line_dedup's flag.
     """
-    toks = tokens_col(text_col)
+    toks = F.col("toks")
     n = F.size(toks)
     pos_structs = F.when(
         n < k, F.array().cast("array<struct<pos:int,h:binary>>")
@@ -894,8 +897,10 @@ def dup_spans(
             ),
         )
     )
-    pos = df.select(F.col(id_col), F.explode(pos_structs).alias("s")).select(
-        id_col, F.col("s.pos").alias("pos"), F.col("s.h").alias("h")
+    pos = (
+        df.select(F.col(id_col), tokens_col(text_col).alias("toks"))
+        .select(F.col(id_col), F.explode(pos_structs).alias("s"))
+        .select(id_col, F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
     )
     dup = (
         pos.groupBy("h")
@@ -908,23 +913,44 @@ def dup_spans(
     marked = (
         pos.join(dup, "h")
         .groupBy(id_col)
-        .agg(F.collect_set("pos").alias("dup_pos"))
+        .agg(F.array_sort(F.collect_set("pos")).alias("dup_pos"))
     )
-    kept = F.filter(
-        toks,
-        lambda x, i: ~F.exists(
-            F.col("dup_pos"), lambda p: (p <= i) & (i < p + F.lit(k))
+    # sorted marked positions -> disjoint covered intervals [start, end):
+    # window [p, p+k) opens an interval only when it starts past the
+    # previous window's end and closes one only when the next window
+    # starts past its own, so an all-duplicate doc is ONE interval
+    dp = F.col("dp")
+    starts = F.filter(dp, lambda p, i: (i == 0) | (p > F.get(dp, i - 1) + k))
+    ends = F.transform(
+        F.filter(
+            dp,
+            lambda p, i: (i == F.size(dp) - 1) | (F.get(dp, i + 1) > p + k),
         ),
+        lambda p: p + k,
     )
-    clean = F.when(
-        F.col("dup_pos").isNull(), F.array_join(toks, " ")
-    ).otherwise(F.array_join(kept, " "))
-    n_kept = F.when(F.col("dup_pos").isNull(), n).otherwise(F.size(kept))
-    return df.join(marked, id_col, "left").select(
+    # survivors are the gaps [0, s1), [e1, s2), ..., [em, n): one slice
+    # per gap, so marking costs O(tokens + intervals) per doc
+    kept = F.flatten(
+        F.zip_with(
+            F.concat(F.array(F.lit(0)), ends),
+            F.concat(starts, F.array(n)),
+            lambda s, e: F.slice(toks, s + 1, e - s),
+        )
+    )
+    cut = (
+        df.join(marked, id_col, "left")
+        .select(
+            F.col(id_col),
+            tokens_col(text_col).alias("toks"),
+            F.coalesce("dup_pos", F.array().cast("array<int>")).alias("dp"),
+        )
+        .select(F.col(id_col), n.alias("n"), kept.alias("kept"))
+    )
+    return cut.select(
         F.col(id_col),
-        clean.alias("clean_text"),
-        n.cast("int").alias("n_tokens"),
-        (n - n_kept).cast("int").alias("n_removed"),
+        F.array_join("kept", " ").alias("clean_text"),
+        F.col("n").cast("int").alias("n_tokens"),
+        (F.col("n") - F.size("kept")).cast("int").alias("n_removed"),
     )
 
 

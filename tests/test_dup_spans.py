@@ -12,6 +12,7 @@ import contextlib
 import io
 import random
 import re
+import time
 from collections import Counter
 
 import pytest
@@ -87,6 +88,23 @@ def test_dup_spans_random_differential(spark, seed, k):
     }
     _run(spark, docs, k=k, min_occ=2)
     _run(spark, docs, k=k, min_occ=4)
+
+
+@pytest.mark.spark
+def test_dup_spans_long_duplicate_doc_bounded(spark):
+    """Marking cost is bounded per doc: two identical 20,000-token docs
+    mark ~20,000 positions each, merged into one covered interval per
+    doc instead of a per-token scan over every marked position."""
+    text = " ".join(f"t{i}" for i in range(20_000))
+    df = spark.createDataFrame([(1, text), (2, text)], "doc_id int, text string")
+    t0 = time.perf_counter()
+    rows = dup_spans(df, k=8).collect()
+    elapsed = time.perf_counter() - t0
+    assert sorted(tuple(r) for r in rows) == [
+        (1, "", 20_000, 20_000),
+        (2, "", 20_000, 20_000),
+    ]
+    assert elapsed <= 30, elapsed
 
 
 @pytest.mark.spark

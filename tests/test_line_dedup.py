@@ -259,3 +259,27 @@ def test_line_dedup_broadcast_mode_agrees(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.spark
+def test_curate_drops_null_url_pages(spark):
+    """Policy: a page whose url is null is dropped in every configuration
+    (its dedup drop-lists could never join back to it, so keeping it
+    would let it through un-deduplicated)."""
+    import datetime
+
+    from dhtmlparser3_spark.pipeline.curate import curate_corpus
+
+    ts = datetime.datetime(2024, 1, 1)
+    body = "<html><p>plain readable words on this page</p></html>"
+    rows = [
+        (f"http://h/{i}", ts, body.replace("page", f"page {i}").encode(), None, "en")
+        for i in range(4)
+    ]
+    rows.append((None, ts, b"<html><p>the page without any url</p></html>", None, "en"))
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    for kw in ({}, {"line_dedup_min_docs": 2, "dup_span_k": 8}):
+        got = [r["url"] for r in curate_corpus(pages, min_quality=0, **kw).collect()]
+        assert sorted(got) == [f"http://h/{i}" for i in range(4)], kw

@@ -10,6 +10,8 @@ pin the fixed shapes so a refactor cannot silently reintroduce either.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,6 +94,50 @@ def test_extract_pages_plan_one_exchange_one_python_stage(spark):
     assert n_python == 1, plan
     assert plan.count("Exchange") == 1, plan
     assert "hashpartitioning" in plan, plan  # the salted key, not round-robin
+
+
+@pytest.mark.spark
+def test_curate_plan_single_parse_no_persist(spark):
+    """curate_corpus with the multi-reference dedup stages on still runs
+    the parse ONCE: every branch reads one reused url exchange, so the
+    final adaptive plan holds exactly one MapInArrow, and no persist
+    carries the shared result."""
+    from dhtmlparser3_spark.pipeline.curate import curate_corpus
+
+    # both stages must find something, or AQE prunes their branches away:
+    # a footer line for the line stage, a shared span inside unique lines
+    # for the span stage
+    footer = "<p>shared footer line on every page</p>"
+    shared = "one two three four five six seven eight nine"
+    pages = spark.createDataFrame(
+        [
+            (
+                f"https://h{i % 3}.example/{i}",
+                f"<p>article {i} opens {shared} then ends {i}</p>{footer}".encode(),
+            )
+            for i in range(12)
+        ],
+        "url string, html binary",
+    ).withColumn("warc_ts", F.current_timestamp()).withColumn("lang", F.lit("en"))
+    # other tests in the session may leave caches behind: pin that this
+    # query adds none
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    out = curate_corpus(pages, line_dedup_min_docs=2, dup_span_k=8)
+    assert len(out.collect()) == 12
+    final = _plan(out).split("Initial Plan")[0]
+    assert final.count("MapInArrow") == 1, final
+    # a branch pruned at runtime can leave only a ReusedExchange pointing
+    # at a second, already executed parse: every explicit url exchange,
+    # direct or reused, must be the same one
+    url_exchanges = set(
+        re.findall(
+            r"hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM, \[plan_id=(\d+)\]",
+            final,
+        )
+    )
+    assert len(url_exchanges) == 1, final
+    assert "InMemoryRelation" not in final, final
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted
 
 
 @pytest.mark.spark
