@@ -4,7 +4,7 @@ Physical plan (SURVEY.md §3.1/§4):
 
   scan (column-pruned: Catalyst keeps only url/warc_ts/lang/html)
     → salted repartition on xxhash64(url, salt)   [the ONE shuffle]
-    → mapInPandas(extract)                        [Arrow batches, Python CPU]
+    → mapInArrow(extract)                         [Arrow batches, Python CPU]
     → sink / downstream
 
 Why the explicit repartition: Common-Crawl rows cluster by host and size

@@ -11,37 +11,44 @@ single `writeTo(...).append()` of output+lineage in one transaction):
 
 * Work is split into deterministic BUCKETS: ``bucket = xxhash64(url, salt)
   % n_buckets``.  A bucket is the unit of both salting (uniform spread →
-  no host-level skew) and resume (the micro-run).
-* Each micro-run processes one batch of buckets: extract → write output
-  parquet under ``out/bucket=<b>/`` → then append one lineage row
-  ``(run_id, bucket, input_path, n_docs, digest, ts)`` to the lineage
-  table.  The lineage row is written ONLY after the bucket's output commit
-  (parquet _SUCCESS), so the lineage table is always an UNDER-estimate of
-  completed work — a crash between the two leaves an orphan bucket dir
-  that is re-written (overwrite, idempotent) on resume, never duplicated.
-* Resume = anti-join pending buckets against completed lineage rows
-  (``left_anti`` on bucket id), then continue.
+  no host-level skew) and resume.
+* A micro-run takes the pending buckets (at most ``max_buckets_per_run``)
+  and is ONE output job: scan the input once, keep the micro-run's
+  buckets, extract (map-only, html never shuffles), write parquet
+  partitioned by bucket under ``out/bucket=<b>/``.  Then ONE lineage
+  append of a row ``(run_id, bucket, input_path, n_docs, digest, ts)`` per
+  bucket.  The append runs ONLY after the output job committed (parquet
+  _SUCCESS), so the lineage table is always an UNDER-estimate of completed
+  work: a crash between the two leaves that micro-run's buckets as orphan
+  dirs — the orphan window is bounded by ``max_buckets_per_run``.
+* The output write uses DYNAMIC partition overwrite, which replaces only
+  the bucket dirs the micro-run writes: an orphan bucket is re-written on
+  resume (idempotent, never duplicated) and a completed bucket is never
+  touched.  That is what keeps resume idempotent.
+* Resume = the set difference of all bucket ids and the (tiny) set of
+  bucket ids with a committed lineage row, taken in Python (no join).
 * The digest (SUM of per-url crc32 of extracted text — order-free like
-  xor, and what both _process_bucket and verify_run compute) makes
-  re-runs verifiable: re-extracting a completed bucket must reproduce
-  its digest.
+  xor, computed from the COMMITTED files here and again by verify_run)
+  makes re-runs verifiable: re-extracting a completed bucket must
+  reproduce its digest.
 
 At 10^12 docs: buckets ≈ tens of thousands (each a few GB), lineage table
-stays tiny, and every micro-run is one Spark job with bounded state —
-the scheduler never holds the whole corpus in one plan.
+stays tiny, and every micro-run is a fixed number of Spark jobs with
+bounded state — the scheduler never holds the whole corpus in one plan.
 """
 
 from __future__ import annotations
 
 import os
-import time
 import uuid
+from datetime import datetime
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dhtmlparser3_spark.functions.extract import EXTRACT_SCHEMA, make_extract_iterator
+from dhtmlparser3_spark.functions.extract import EXTRACT_SCHEMA
+from dhtmlparser3_spark.pipeline.extract_job import extract_pages
 
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, input_path string, n_docs bigint, "
@@ -56,6 +63,12 @@ def with_bucket(pages: DataFrame, n_buckets: int, salt: int = 2024) -> DataFrame
     )
 
 
+def _missing_locally(path: str) -> bool:
+    # fast check for local paths only — on a remote FS (s3://, hdfs://)
+    # os.path.exists is always False and must not be consulted
+    return "://" not in path and not os.path.exists(path)
+
+
 def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
     """Buckets with a committed lineage row (empty frame if none yet).
 
@@ -66,28 +79,69 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
     then flags as corruption."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    local = "://" not in lineage_path
-    if local and not os.path.exists(lineage_path):
-        # fast check for local paths only — on a remote FS (s3://, hdfs://)
-        # os.path.exists is always False and must not be consulted; the
-        # read below handles remote path-not-found via the exception class
-        return spark.createDataFrame([], "bucket int")
+    none = spark.range(0).select(F.col("id").cast("int").alias("bucket"))
+    if _missing_locally(lineage_path):
+        return none
     try:
         return spark.read.parquet(lineage_path).select("bucket").distinct()
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], "bucket int")
+            return none
         raise
 
 
 def pending_buckets(
     spark: SparkSession, pages: DataFrame, lineage_path: str, n_buckets: int
 ) -> list[int]:
-    done = completed_buckets(spark, lineage_path)
-    all_b = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    rows = all_b.join(done, "bucket", "left_anti").collect()
-    return sorted(r.bucket for r in rows)
+    if _missing_locally(lineage_path):
+        return list(range(n_buckets))
+    done = {r.bucket for r in completed_buckets(spark, lineage_path).collect()}
+    return [b for b in range(n_buckets) if b not in done]
+
+
+def _bucket_output(
+    pages: DataFrame, buckets: Sequence[int], n_buckets: int
+) -> DataFrame:
+    """The extracted rows of ``buckets``, with their ``bucket`` column: one
+    scan of ``pages``, a filter, the Arrow extract straight over the scan
+    splits (no exchange), and the bucket re-attached from the output url
+    (the same deterministic hash, so each row lands in its own bucket)."""
+    part = with_bucket(pages, n_buckets).where(F.col("bucket").isin(list(buckets)))
+    out = extract_pages(part, repartition="none", with_metrics=False)
+    return with_bucket(out, n_buckets)
+
+
+def _bucket_digests(
+    spark: SparkSession, output_path: str, buckets: Sequence[int]
+) -> dict:
+    """{bucket: (n_docs, digest)} computed from the COMMITTED files, not
+    the in-flight frame; a bucket with no rows is absent."""
+    written = (
+        spark.read.schema(f"{EXTRACT_SCHEMA}, bucket int")
+        .parquet(output_path)
+        .where(F.col("bucket").isin(list(buckets)))
+    )
+    rows = written.groupBy("bucket").agg(
+        F.count("*").alias("n"),
+        F.sum(F.crc32(F.concat_ws(" ", "url", "extracted_text"))).alias("digest"),
+    ).collect()
+    return {r.bucket: (r.n, r.digest) for r in rows}
+
+
+def _lineage_frame(spark: SparkSession, rows: Sequence[tuple]) -> DataFrame:
+    """Lineage rows as a JVM-side frame typed by LINEAGE_SCHEMA (literals
+    under ``inline``: no Python-side parallelize, so no Python task)."""
+    fields = [f.split() for f in LINEAGE_SCHEMA.split(", ")]
+    structs = [
+        F.struct(*[F.lit(v).cast(t).alias(n) for (n, t), v in zip(fields, row)])
+        for row in rows
+    ]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
+
+
+def _append_lineage(frame: DataFrame, lineage_path: str) -> None:
+    frame.write.mode("append").parquet(lineage_path)
 
 
 def run_extract_job(
@@ -100,79 +154,50 @@ def run_extract_job(
     max_buckets_per_run: Optional[int] = None,
     fail_after_buckets: Optional[int] = None,
 ) -> dict:
-    """Resumable extraction: processes pending buckets, committing lineage
-    per bucket.  ``fail_after_buckets`` simulates a mid-job kill (tests).
+    """One resumable micro-run over the pending buckets (at most
+    ``max_buckets_per_run``): one output job that writes every bucket of
+    the micro-run with dynamic partition overwrite, then one lineage append
+    with a row per bucket.  A kill between the two leaves at most the
+    micro-run's buckets as orphans, which the next run rewrites; dynamic
+    overwrite never touches a completed bucket, so resume is idempotent.
+    ``fail_after_buckets`` simulates a kill (tests): the output commits,
+    the first ``fail_after_buckets`` lineage rows are appended, then it
+    raises.
 
     Returns {run_id, processed, skipped, total}.
     """
     run_id = uuid.uuid4().hex[:12]
-    bucketed = with_bucket(pages, n_buckets)
     pending = pending_buckets(spark, pages, lineage_path, n_buckets)
     skipped = n_buckets - len(pending)
     if max_buckets_per_run is not None:
         pending = pending[:max_buckets_per_run]
 
-    processed = 0
-    for i, b in enumerate(pending):
-        if fail_after_buckets is not None and i >= fail_after_buckets:
-            raise RuntimeError(f"simulated kill after {i} buckets")
-        _process_bucket(
-            spark, bucketed, b, output_path, lineage_path, run_id, input_path
+    if pending:
+        (
+            _bucket_output(pages, pending, n_buckets)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(output_path)
         )
-        processed += 1
+        digests = _bucket_digests(spark, output_path, pending)
+        committed_at = datetime.now()
+        rows = [
+            (run_id, b, input_path, *digests.get(b, (0, 0)), committed_at)
+            for b in pending
+        ]
+        k = len(rows) if fail_after_buckets is None else fail_after_buckets
+        # append AFTER the output committed: lineage never over-claims
+        if rows[:k]:
+            _append_lineage(_lineage_frame(spark, rows[:k]), lineage_path)
+        if k < len(rows):
+            raise RuntimeError(f"simulated kill after {k} buckets")
     return {
         "run_id": run_id,
-        "processed": processed,
+        "processed": len(pending),
         "skipped": skipped,
         "total": n_buckets,
     }
-
-
-def _process_bucket(
-    spark: SparkSession,
-    bucketed: DataFrame,
-    bucket: int,
-    output_path: str,
-    lineage_path: str,
-    run_id: str,
-    input_path: str,
-) -> None:
-    part = bucketed.where(F.col("bucket") == bucket).select(
-        "url", "warc_ts", "lang", "html"
-    )
-    out = part.mapInPandas(make_extract_iterator(), schema=EXTRACT_SCHEMA)
-    bucket_dir = os.path.join(output_path, f"bucket={bucket}")
-    # overwrite → re-running a half-written bucket is idempotent
-    out.write.mode("overwrite").parquet(bucket_dir)
-
-    # digest computed from the COMMITTED files, not the in-flight frame
-    written = spark.read.parquet(bucket_dir)
-    agg = written.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.crc32(F.concat_ws(" ", "url", "extracted_text"))),
-            F.lit(0),
-        ).alias("digest"),
-    ).collect()[0]
-
-    lineage_row = spark.createDataFrame(
-        [
-            (
-                run_id,
-                bucket,
-                input_path,
-                int(agg.n),
-                int(agg.digest),
-                time.time_ns() // 1000,
-            )
-        ],
-        "run_id string, bucket int, input_path string, n_docs bigint, "
-        "digest bigint, committed_us long",
-    ).withColumn(
-        "committed_at", F.timestamp_micros(F.col("committed_us"))
-    ).drop("committed_us")
-    # append AFTER the bucket output committed: lineage never over-claims
-    lineage_row.write.mode("append").parquet(lineage_path)
 
 
 def verify_run(

@@ -4,7 +4,7 @@ The batch pipeline lifts unchanged into streaming:
 
 * source: ``spark.readStream`` over a pages directory (file source —
   each new parquet file is a micro-batch; in production: Iceberg/Kafka),
-* transform: EITHER the direct mapInPandas plan (fully incremental,
+* transform: EITHER the direct mapInArrow extract plan (fully incremental,
   checkpointed by the engine) OR ``foreachBatch`` reusing the exact batch
   ``extract_pages`` job — foreachBatch is the north-star shape because it
   keeps the salted repartition and lets the sink be transactional per
@@ -21,7 +21,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dhtmlparser3_spark.functions.extract import EXTRACT_SCHEMA, make_extract_iterator
+from dhtmlparser3_spark.functions.extract import (
+    EXTRACT_SCHEMA,
+    make_extract_arrow_iterator,
+)
 from dhtmlparser3_spark.pipeline.extract_job import extract_pages
 
 PAGES_SCHEMA = (
@@ -39,9 +42,9 @@ def read_pages_stream(spark: SparkSession, path: str) -> DataFrame:
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
-    """Incremental plan: streaming mapInPandas (no shuffle, stateless)."""
-    return pages_stream.select("url", "warc_ts", "lang", "html").mapInPandas(
-        make_extract_iterator(), schema=EXTRACT_SCHEMA
+    """Incremental plan: streaming mapInArrow (no shuffle, stateless)."""
+    return pages_stream.select("url", "warc_ts", "lang", "html").mapInArrow(
+        make_extract_arrow_iterator(), schema=EXTRACT_SCHEMA
     )
 
 

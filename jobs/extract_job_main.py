@@ -62,7 +62,15 @@ def main() -> int:
         "pass (wat_metadata)",
     )
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--max-buckets", type=int, default=None)
+    ap.add_argument(
+        "--max-buckets",
+        type=int,
+        default=None,
+        help="buckets per micro-run (default: every pending bucket): bounds "
+        "both the size of the micro-run's one output job and its orphan "
+        "window — the buckets a kill between the output commit and the "
+        "lineage append leaves to be rewritten on resume",
+    )
     ap.add_argument("--multiplier", type=int, default=1)
     args = ap.parse_args()
 

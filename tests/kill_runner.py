@@ -1,18 +1,19 @@
 """Subprocess runner for the real-SIGKILL resume test.
 
-Runs a resumable extract job and SIGKILLs ITSELF (no Python cleanup, no
-JVM shutdown hooks, no parquet-writer close) partway through — the real
-"killed job" of the north-star contract, unlike the in-process simulated
-RuntimeError the other tests use.
+Runs resumable extract micro-runs and SIGKILLs ITSELF (no Python cleanup,
+no JVM shutdown hooks, no parquet-writer close) partway through — the
+real "killed job" of the north-star contract, unlike the in-process
+simulated RuntimeError the other tests use.
 
 Usage: kill_runner.py <output_path> <lineage_path> <mode>
-  mode=cut     SIGKILL before processing the 4th bucket (clean cut:
-               3 committed buckets, nothing in flight).
-  mode=orphan  commit the 4th bucket's OUTPUT but lose its lineage row,
-               then SIGKILL — on-disk state identical to a kill landing
-               in the window between the output commit and the lineage
-               append (the orphan-bucket crash window lineage.py:17-22
-               documents).
+  Both modes first run one micro-run of 3 of the 8 buckets to completion.
+  mode=cut     SIGKILL before the next micro-run (clean cut: 3 committed
+               buckets, nothing in flight).
+  mode=orphan  run a 1-bucket micro-run whose lineage append SIGKILLs:
+               its output commits, its lineage row dies with the process
+               — a kill landing in the window between the output commit
+               and the lineage append (the orphan-bucket crash window
+               pipeline/lineage.py documents).
 """
 import os
 import signal
@@ -25,30 +26,22 @@ from dhtmlparser3_spark.plans.session import get_spark
 from dhtmlparser3_spark.sources.pages import build_pages
 
 
+def kill(why: str) -> None:
+    print(f"KILLING self {why}", flush=True)
+    os.kill(os.getpid(), signal.SIGKILL)
+
+
 def main() -> None:
     out, lin, mode = sys.argv[1], sys.argv[2], sys.argv[3]
     spark = get_spark(app_name="kill-runner", cpus=4)
     pages = build_pages(spark, "/root/testdata/sf0.001")
 
-    real = ln._process_bucket
-    state = {"n": 0}
-
-    def wrapper(spark, bucketed, bucket, output_path, lineage_path,
-                run_id, input_path):
-        if state["n"] == 3:
-            if mode == "orphan":
-                real(spark, bucketed, bucket, output_path,
-                     lineage_path + ".lost", run_id, input_path)
-            print(f"KILLING self at bucket #{state['n']} (mode={mode})",
-                  flush=True)
-            os.kill(os.getpid(), signal.SIGKILL)
-        real(spark, bucketed, bucket, output_path, lineage_path,
-             run_id, input_path)
-        state["n"] += 1
-        print(f"BUCKET_DONE {state['n']}", flush=True)
-
-    ln._process_bucket = wrapper
-    ln.run_extract_job(spark, pages, out, lin, n_buckets=8)
+    r = ln.run_extract_job(spark, pages, out, lin, n_buckets=8, max_buckets_per_run=3)
+    print(f"MICRO_RUN_DONE {r['processed']}", flush=True)
+    if mode == "cut":
+        kill("before the next micro-run")
+    ln._append_lineage = lambda frame, lineage_path: kill("at the lineage append")
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=8, max_buckets_per_run=1)
     print("UNREACHABLE: job completed without being killed", flush=True)
     sys.exit(3)
 

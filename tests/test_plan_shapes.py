@@ -229,6 +229,24 @@ def test_warc_extract_plan_zero_exchanges(spark, tmp_path):
 
 
 @pytest.mark.spark
+def test_lineage_micro_run_plan_zero_exchanges(spark, tmp_path):
+    """The resumable job's output frame for a micro-run is one map-only
+    chain from the WARC scan to the extract: no Exchange, so html never
+    shuffles and the input is scanned once for all of the run's buckets."""
+    from dhtmlparser3_spark.pipeline.lineage import _bucket_output
+    from dhtmlparser3_spark.sources.warc import warc_pages, write_warc_gz
+
+    path = str(tmp_path / "p.warc.gz")
+    write_warc_gz(
+        [("http://x/1", "2024-01-01T00:00:00Z", b"<p>a</p>")], path
+    )
+    plan = _plan(_bucket_output(warc_pages(spark, path), [0, 2, 3], 4))
+    assert "Exchange" not in plan, plan
+    assert plan.count("Scan binaryFile") == 1, plan
+    assert plan.count("MapInArrow") == 2, plan
+
+
+@pytest.mark.spark
 def test_redirect_chain_plan_all_equi_joins(spark):
     """resolve_redirect_chains must stay key-equi pointer jumping:
     SortMergeJoin/BroadcastHashJoin only — a refactor that loses the

@@ -1689,3 +1689,20 @@ def test_crawl_health_per_host(spark, tmp_path):
     assert (b.n_captures, b.n_ok, b.n_server_err, b.n_errors) == (
         2, 0, 1, 1
     )
+
+
+def test_http_response_duplicate_content_encoding_last_wins():
+    """Policy pin: conflicting duplicate ``Content-Encoding`` headers
+    decode by the LAST one (``_http_headers`` keeps the last duplicate)."""
+    from dhtmlparser3_spark.sources.warc import http_response
+
+    html = b"<p>dup &amp; coding</p>"
+
+    def block(codings, body):
+        head = b"".join(b"Content-Encoding: %s\r\n" % c for c in codings)
+        return b"HTTP/1.1 200 OK\r\n" + head + b"\r\n" + body
+
+    plain = block([b"gzip", b"identity"], html)
+    assert http_response(plain) == (200, html, None, None)
+    gz = block([b"identity", b"gzip"], gzip.compress(html, mtime=0))
+    assert http_response(gz) == (200, html, None, None)
